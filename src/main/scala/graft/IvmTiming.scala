@@ -1,7 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions.{col, lit, pmod}
+import org.apache.spark.sql.functions.col
 
 /** Evidence tool (Bench's sibling): the incremental-vs-oneshot timing
   * pair for near-dup cluster maintenance — the number that SHOWS the
@@ -95,8 +94,8 @@ object IvmTiming {
     // build the durable star table now too (idempotent; the memo is
     // warm, so this is a node-count-sized write, not a re-derivation)
     graft.dedup.DedupOps.settledStarsTable(spark, dir)
-    val isNew = pmod(col("doc_a"), lit(10)) === graft.dedup.DedupOps.IncBatchMod ||
-      pmod(col("doc_b"), lit(10)) === graft.dedup.DedupOps.IncBatchMod
+    val isNew = graft.dedup.DedupOps.isIncBatch(col("doc_a")) ||
+      graft.dedup.DedupOps.isIncBatch(col("doc_b"))
     val batchEdges = pairs.filter(isNew).count()
     // land the batch pairs in a tiny parquet NOW, while the pair memo
     // is warm — the durable-cluster leg below runs from fully cold

@@ -26,34 +26,51 @@ object Tables {
     * file count alone reaches `atLeast` no footer is opened, so at
     * real scale (thousands of files) this is a directory listing,
     * not a metadata sweep. Cached per path — layout is immutable for
-    * a fixture's lifetime.
+    * a fixture's lifetime. A failed probe (missing path, unreadable
+    * footer) answers `atLeast` — assume parallel enough — but is NOT
+    * cached, so a transient error cannot switch the fan-out off for
+    * the rest of the JVM; it is logged once per path, with its reason.
     */
   private val scanUnitCache =
     new java.util.concurrent.ConcurrentHashMap[String, Integer]()
+  private val scanUnitFailuresLogged =
+    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
 
-  private def scanUnits(s: SparkSession, path: String, atLeast: Int): Int =
-    scanUnitCache.computeIfAbsent(path + "#" + atLeast, { _ =>
-      try {
-        val conf = s.sessionState.newHadoopConf()
-        val p = new org.apache.hadoop.fs.Path(path)
-        val fs = p.getFileSystem(conf)
-        val files = {
-          val st = fs.getFileStatus(p)
-          if (st.isDirectory)
-            fs.listStatus(p).toSeq.filter(f => f.isFile &&
-              !f.getPath.getName.startsWith("_") &&
-              !f.getPath.getName.startsWith("."))
-          else Seq(st)
-        }
-        if (files.size >= atLeast) Integer.valueOf(files.size)
-        else Integer.valueOf(files.map { f =>
+  private[graft] def scanUnits(s: SparkSession, path: String, atLeast: Int): Int = {
+    val key = path + "#" + atLeast
+    val cached = scanUnitCache.get(key)
+    if (cached != null) cached.intValue()
+    else try {
+      val conf = s.sessionState.newHadoopConf()
+      val p = new org.apache.hadoop.fs.Path(path)
+      val fs = p.getFileSystem(conf)
+      val files = {
+        val st = fs.getFileStatus(p)
+        if (st.isDirectory)
+          fs.listStatus(p).toSeq.filter(f => f.isFile &&
+            !f.getPath.getName.startsWith("_") &&
+            !f.getPath.getName.startsWith("."))
+        else Seq(st)
+      }
+      val n =
+        if (files.size >= atLeast) files.size
+        else files.map { f =>
           val in = org.apache.parquet.hadoop.ParquetFileReader.open(
             org.apache.parquet.hadoop.util.HadoopInputFile
               .fromStatus(f, conf))
           try in.getRowGroups.size finally in.close()
-        }.sum)
-      } catch { case _: Throwable => Integer.valueOf(atLeast) } // unknown: assume parallel enough
-    }).intValue()
+        }.sum
+      scanUnitCache.putIfAbsent(key, Integer.valueOf(n))
+      n
+    } catch {
+      case scala.util.control.NonFatal(e) =>
+        if (scanUnitFailuresLogged.add(path))
+          org.slf4j.LoggerFactory.getLogger(getClass).warn(
+            s"scan-unit probe of $path failed ($e); assuming $atLeast " +
+              "scan tasks, so the fan-out is skipped until a probe succeeds")
+        atLeast
+    }
+  }
 
   /** Scale-adaptive map-side fan-out (optimization guide §2: make
     * partitioning scale-adaptive, never a constant tuned for one

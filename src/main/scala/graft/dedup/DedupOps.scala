@@ -1,6 +1,6 @@
 package graft.dedup
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.{Q, Tables}
@@ -92,7 +92,8 @@ object DedupOps {
   /** One row per (document, distinct shingle) with the doc's shingle
     * count — a typed flatMap: a single JVM pass per document, emitted
     * once, memoized per (session, dataset), and reused by the exact
-    * joins, the MinHash signature aggregation, and the histogram.
+    * joins, the prefix-family substrates (and through them MinHash
+    * signing), and the histogram.
     */
   private def shingleRows(s: SparkSession, dir: String): DataFrame =
     substrate("shingles", s, dir) {
@@ -193,7 +194,7 @@ object DedupOps {
     * boundary cases.
     */
   def prefixFilterJaccard(s: SparkSession, dir: String): DataFrame =
-    verifyJaccardPairs(s, dir, prefixFilterCandidates(s, dir))
+    prefixFilterJaccardAt(s, dir, 4, 5)
 
   /** Per-doc shingles ranked by the corpus-wide rarity order (df ASC,
     * hash ASC) — the shared substrate of the prefix-filter family
@@ -252,10 +253,6 @@ object DedupOps {
       .select(col("doc_a"), col("doc_b")).distinct()
   }
 
-  /** Exact verification of candidate pairs against the full hashed
-    * shingle sets — shared by every symmetric prefix-family variant;
-    * same output contract and rounding as [[ngramJaccard]].
-    */
   /** Per-doc full hashed shingle sets for exact verification — built
     * from the memoized [[rarityRanked]] frame (8-byte hashes, no
     * shingle strings), so the expensive bag scan + xxhash re-eval
@@ -303,16 +300,20 @@ object DedupOps {
     }
   }
 
-  private def verifyJaccardPairs(
-      s: SparkSession, dir: String, cand: DataFrame,
-      t: Double = 0.8): DataFrame = {
-    val sets = hashedSets(s, dir)
-    val a = sets.select(col("doc_id").as("doc_a"), col("hs").as("ha"),
+  /** The one exact Jaccard verifier: candidate (doc_a, doc_b) pairs
+    * joined against two `(doc_id, hs, n_sh)` set frames — doc_a looks
+    * up `setsA`, doc_b looks up `setsB` — keeping J ≥ t, with the same
+    * output contract and rounding as [[ngramJaccard]]. The symmetric
+    * rungs pass one frame twice; the durable maintenance path passes
+    * its batch sets and its settled table, never their union.
+    */
+  private def verifyJaccard(cand: DataFrame, setsA: DataFrame,
+      setsB: DataFrame, t: Double = 0.8): DataFrame = {
+    val a = setsA.select(col("doc_id").as("doc_a"), col("hs").as("ha"),
       col("n_sh").as("na"))
-    val b = sets.select(col("doc_id").as("doc_b"), col("hs").as("hb"),
+    val b = setsB.select(col("doc_id").as("doc_b"), col("hs").as("hb"),
       col("n_sh").as("nb"))
-    cand.select(col("doc_a"), col("doc_b"))
-      .join(a, Seq("doc_a")).join(b, Seq("doc_b"))
+    cand.join(a, Seq("doc_a")).join(b, Seq("doc_b"))
       .withColumn("inter", size(array_intersect(col("ha"), col("hb"))))
       .withColumn("j", col("inter") / (col("na") + col("nb") - col("inter")))
       .filter(col("j") >= t)
@@ -330,14 +331,18 @@ object DedupOps {
     * more than double epsilon.)
     */
   private[graft] def prefixFilterJaccardAt(
-      s: SparkSession, dir: String, p: Int, q: Int): DataFrame =
-    verifyJaccardPairs(s, dir, prefixFilterCandidatesAt(s, dir, p, q),
+      s: SparkSession, dir: String, p: Int, q: Int): DataFrame = {
+    val sets = hashedSets(s, dir)
+    verifyJaccard(prefixFilterCandidatesAt(s, dir, p, q), sets, sets,
       p.toDouble / q)
+  }
 
   private[graft] def ppjoinJaccardAt(
-      s: SparkSession, dir: String, p: Int, q: Int): DataFrame =
-    verifyJaccardPairs(s, dir, ppjoinCandidatesAt(s, dir, p, q),
+      s: SparkSession, dir: String, p: Int, q: Int): DataFrame = {
+    val sets = hashedSets(s, dir)
+    verifyJaccard(ppjoinCandidatesAt(s, dir, p, q), sets, sets,
       p.toDouble / q)
+  }
 
   /** [[prefixFilterJaccard]] plus PPJoin's LENGTH and POSITIONAL
     * filters (Xiao et al., WWW'08) — the next rung on the AllPairs
@@ -371,7 +376,7 @@ object DedupOps {
     * filter's (the economy that justifies the rung).
     */
   def ppjoinJaccard(s: SparkSession, dir: String): DataFrame =
-    verifyJaccardPairs(s, dir, ppjoinCandidates(s, dir))
+    ppjoinJaccardAt(s, dir, 4, 5)
 
   private[graft] def ppjoinCandidates(
       s: SparkSession, dir: String): DataFrame =
@@ -463,7 +468,7 @@ object DedupOps {
     * gate checks completeness, PrefixFilterSpec checks equality.
     */
   def containmentPrefixFilter(s: SparkSession, dir: String): DataFrame =
-    verifyContainmentPairs(s, dir, containmentPrefixCandidates(s, dir))
+    containmentPrefixFilterAt(s, dir, 9, 10)
 
   /** Asymmetric prefix candidate generation: the contained side's
     * rarity prefix (t = 0.9 → |A| − ⌈0.9|A|⌉ + 1 rarest shingles)
@@ -539,7 +544,7 @@ object DedupOps {
     * crafted boundary fixtures for every bound above.
     */
   def containmentPpjoin(s: SparkSession, dir: String): DataFrame =
-    verifyContainmentPairs(s, dir, containmentPpjoinCandidates(s, dir))
+    containmentPpjoinAt(s, dir, 9, 10)
 
   private[graft] def containmentPpjoinCandidates(
       s: SparkSession, dir: String): DataFrame =
@@ -587,8 +592,7 @@ object DedupOps {
     * same output contract and rounding as [[containmentPairs]].
     */
   private def verifyContainmentPairs(
-      s: SparkSession, dir: String, cand: DataFrame,
-      t: Double = 0.9): DataFrame = {
+      s: SparkSession, dir: String, cand: DataFrame, t: Double): DataFrame = {
     val sets = hashedSets(s, dir)
     cand
       .join(sets.select(col("doc_id").as("doc_a"), col("hs").as("ha"),
@@ -634,16 +638,31 @@ object DedupOps {
        |JOIN sizes sb ON sb.doc_id = doc_b
        |WHERE inter / (sa.n + sb.n - inter) >= 0.8""".stripMargin
 
+  private val containmentOracle =
+    s"""WITH toks AS (
+       |  SELECT doc_id, $tokensSql AS t FROM documents),
+       |sh AS (
+       |  SELECT DISTINCT doc_id,
+       |    unnest(list_transform(range(1, greatest(len(t)-1, 1)),
+       |      i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2])) AS shingle
+       |  FROM toks),
+       |sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY 1),
+       |pairs AS (
+       |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS inter
+       |  FROM sh a JOIN sh b ON a.shingle = b.shingle
+       |    AND a.doc_id <> b.doc_id
+       |  GROUP BY 1, 2)
+       |SELECT doc_a, doc_b, round(inter / sa.n, 6) AS containment
+       |FROM pairs JOIN sizes sa ON sa.doc_id = doc_a
+       |WHERE inter / sa.n >= 0.9""".stripMargin
+
   // ---- MinHash + banded LSH ----------------------------------------
 
   /** 96 universal hashes h_i(x) = (a_i·x + b_i) mod p over 31-bit
     * shingle hashes; 24 bands × 4 rows. P[candidate | J=0.8] =
     * 1−(1−0.8⁴)²⁴ ≈ 1−3.5e-6 (and ≈1−1e-11 at the fixture's planted
     * J≥0.9), so at the 0.8 threshold LSH recall is ~1 and the
-    * verified output equals the exact brute-force oracle. 96 keeps
-    * the signature aggregation under spark.sql.codegen.maxFields
-    * (default 100) — at 128 the whole-stage-codegen pass bails out
-    * and the hottest aggregate in the query runs interpreted.
+    * verified output equals the exact brute-force oracle.
     */
   private val P = 2147483647L // 2^31 − 1
   val NumHashes = 96
@@ -681,13 +700,15 @@ object DedupOps {
       org.apache.spark.unsafe.types.UTF8String.fromString(sh),
       org.apache.spark.sql.types.StringType, 42L)
 
-  /** JVM twin of the MinHash signature: per-permutation minima over
-    * 31-bit residues (pmod == `%` here — every operand is
-    * non-negative, and products stay under 2⁶² so Long arithmetic
+  /** JVM twin of [[minhashSignature]] over raw 64-bit shingle hashes:
+    * each is reduced once to its 31-bit residue (floorMod == SQL
+    * `pmod`), then per-permutation minima are taken (every operand is
+    * non-negative and products stay under 2⁶², so Long arithmetic
     * matches the SQL expressions exactly). Empty input → the
     * all-[[P]] sentinel, same as [[minhashSignature]].
     */
-  private[dedup] def signatureOf(xs: Array[Long]): Array[Long] =
+  private[dedup] def signatureOf(x64: Array[Long]): Array[Long] = {
+    val xs = x64.map(v => java.lang.Math.floorMod(v, P))
     Array.tabulate(NumHashes) { i =>
       var m = P
       var j = 0
@@ -698,14 +719,15 @@ object DedupOps {
       }
       m
     }
+  }
 
-  /** JVM twin of the band key: SQL `xxhash64(m0, m1, ..)` seed-chains
-    * the arguments (each value hashed with the running hash as seed,
-    * starting from 42) — replicated here so JVM-computed keys land in
-    * the same buckets as [[minhashBuckets]]'s.
+  /** JVM twin of the SQL band key `xxhash64(m0, m1, ..)` over one
+    * band's `rows` signature entries: SQL seed-chains the arguments
+    * (each value hashed with the running hash as seed, starting from
+    * 42), so the keys equal what `xxhash64` over the
+    * [[minhashSignature]] columns gives (DedupSpec pins it).
     */
-  private[dedup] def bandKey(sig: Array[Long], band: Int,
-      rows: Int = RowsPerBand): Long = {
+  private def bandKey(sig: Array[Long], band: Int, rows: Int): Long = {
     var h = 42L
     var r = 0
     while (r < rows) {
@@ -716,177 +738,108 @@ object DedupOps {
     h
   }
 
-  /** Banded LSH candidate pairs at an ARBITRARY band split of the
-    * [[NumHashes]]-long signature (bands must divide it) — the
-    * fuzz-sweep form of [[minhashNeardup]]'s candidate stage.
-    * DedupFuzzSpec checks the deterministic pigeonhole guarantee at
-    * every sampled split: two docs whose signatures disagree in FEWER
-    * than `bands` positions cannot spoil every band, so they MUST
-    * collide in at least one — in particular identical shingle sets
-    * (identical signatures) are candidates under any split.
+  /** The one MinHash sign-and-band kernel, shared by the batch,
+    * incremental, durable and streaming paths: raw 64-bit shingle
+    * hashes → [[signatureOf]] → one [[bandKey]] per band (`bands` must
+    * divide [[NumHashes]]). A doc with no shingles gets no keys, so it
+    * never enters a band bucket.
     */
-  private[graft] def minhashBandedCandidatesAt(
-      s: SparkSession, dir: String, bands: Int): DataFrame = {
-    require(NumHashes % bands == 0, s"bands=$bands must divide $NumHashes")
-    import s.implicits._
-    val rows = NumHashes / bands
-    val buckets = Tables.documents(s, dir)
-      .select(col("doc_id"), col("text")).as[(Long, String)]
-      .flatMap { case (id, text) =>
-        val x64 = shingleStrings(text).map(hashShingle).toArray
-        if (x64.isEmpty) Nil
-        else {
-          val sig = signatureOf(x64.map(v => ((v % P) + P) % P))
-          (0 until bands).map(b => (id, b, bandKey(sig, b, rows)))
-        }
-      }
-      .toDF("doc_id", "band", "bkey")
+  private[dedup] def bandKeys(x64: Array[Long], bands: Int = Bands): Array[Long] =
+    if (x64.isEmpty) Array.emptyLongArray
+    else {
+      val sig = signatureOf(x64)
+      val rows = NumHashes / bands
+      Array.tabulate(bands)(b => bandKey(sig, b, rows))
+    }
+
+  /** Candidate pairs of a (doc_id, band, bkey) bucket frame: the band
+    * self-join, one row per doc_a < doc_b pair (a pair may collide in
+    * many bands, hence the distinct).
+    */
+  private[graft] def bandPairs(buckets: DataFrame): DataFrame =
     buckets.toDF("doc_a", "band", "bkey")
       .join(buckets.toDF("doc_b", "band", "bkey"), Seq("band", "bkey"))
       .filter(col("doc_a") < col("doc_b"))
       .select(col("doc_a"), col("doc_b")).distinct()
-  }
 
   /** Banded-LSH candidate pairs verified by exact Jaccard ≥ 0.8 —
     * same output contract (and oracle) as [[ngramJaccard]], but the
-    * join is on band buckets: shuffle cost O(docs × bands), never
-    * all-pairs. This is the dedup plan that survives 100 TB.
+    * candidate join is on band buckets: shuffle cost O(docs × bands),
+    * never all-pairs.
     *
-    * Signatures are computed by exploding shingles and taking
-    * [[NumHashes]] `min` aggregates — a single partial-aggregated
-    * hash agg over simple codegen'd arithmetic. (The array-expression
-    * form in [[minhashSignature]] builds a NumHashes-branch
-    * expression tree that overflows whole-stage codegen; kept for
-    * per-row use in specs.)
+    * Both the band keys and the verification sets come from the
+    * memoized [[hashedSets]] substrate — the frame the prefix rungs
+    * verify against ([[hashShingle]] IS SQL xxhash64, seed 42, the
+    * parity DedupSpec pins, so the set values are the same). The
+    * signing pass is typed ([[bandKeys]] per doc, no aggregate); the
+    * doc_id repartition spreads it across cores (the cached frame may
+    * sit in one coalesced partition) — hash-keyed, so deterministic,
+    * and the per-permutation min is order-free. The substrate pays off
+    * when the dedup family runs together: a lone run builds the
+    * rarity-ranked frame (df join, per-doc rank, collect_set) that a
+    * stateless pass over the documents would not, and where
+    * [[hashedSets]] declines to pin (large decades) that subtree is
+    * recomputed rather than cached.
     */
   def minhashNeardup(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    // r12: both the signatures and the verification sets derive from
-    // the memoized [[hashedSets]] substrate instead of two fresh
-    // tokenize+shingle+hash passes over the corpus per call —
-    // [[hashShingle]] IS SQL xxhash64 (seed 42, the parity DedupSpec
-    // pins), so the hash sets are the same values. The doc_id
-    // repartition spreads the 96-permutation signature fold across
-    // cores (the cached frame may sit in one coalesced partition);
-    // hash-keyed, so deterministic, and the per-permutation min is
-    // order-free, so array order differences are invisible.
     val sets = hashedSets(s, dir)
-      .select(col("doc_id"), col("hs").as("shset"), col("n_sh"))
     val buckets = sets
       .repartition(s.sparkContext.defaultParallelism, col("doc_id"))
-      .select(col("doc_id"), col("shset")).as[(Long, Seq[Long])]
+      .select(col("doc_id"), col("hs")).as[(Long, Seq[Long])]
       .flatMap { case (id, hs) =>
-        val sig = signatureOf(hs.iterator.map(v => ((v % P) + P) % P).toArray)
-        (0 until Bands).map(b => (id, b, bandKey(sig, b)))
+        val keys = bandKeys(hs.toArray)
+        keys.indices.map(b => (id, b, keys(b)))
       }
       .toDF("doc_id", "band", "bkey")
-    val cand = buckets.toDF("doc_a", "band", "bkey")
-      .join(buckets.toDF("doc_b", "band", "bkey"), Seq("band", "bkey"))
-      .filter(col("doc_a") < col("doc_b"))
-      .select("doc_a", "doc_b").distinct() // a pair may collide in many bands
-    verifyJaccard(cand, sets, sets)
+    verifyJaccard(bandPairs(buckets), sets, sets)
   }
 
-  /** Shingle rows with the two hash forms the MinHash path needs —
-    * x64: 64-bit identity for exact set verification (collision-free
-    * in practice); x: its 31-bit residue feeding the permutations.
+  /** `documents` as typed (doc_id, text) rows, restricted to the
+    * arriving batch (`Some(true)`), the settled corpus (`Some(false)`)
+    * or not at all (`None`).
     */
-  private def hashedShingles(s: SparkSession, dir: String): DataFrame =
-    shingleRows(s, dir)
-      .withColumn("x64", xxhash64(col("shingle")))
-      .withColumn("x", pmod(col("x64"), lit(P)))
-
-  /** Per-doc (band, bucket-key) rows — the banded LSH index build:
-    * one partial-aggregated hash agg for the [[NumHashes]] minima,
-    * then a [[Bands]]-way explode. (The array-expression form in
-    * [[minhashSignature]] builds a NumHashes-branch expression tree
-    * that overflows whole-stage codegen; kept for per-row spec use.)
-    */
-  private def minhashBuckets(sh: DataFrame): DataFrame = {
-    val minCols = (0 until NumHashes).map(i =>
-      min(pmod(lit(hashA(i)) * col("x") + lit(hashB(i)), lit(P))).as(s"m$i"))
-    val sigs = sh.groupBy(col("doc_id")).agg(minCols.head, minCols.tail: _*)
-    val bandKeys = (0 until Bands).map { bnd =>
-      val slice = (0 until RowsPerBand).map(r => col(s"m${bnd * RowsPerBand + r}"))
-      struct(lit(bnd).as("band"), xxhash64(slice: _*).as("bkey"))
-    }
-    sigs
-      .select(col("doc_id"), explode(array(bandKeys: _*)).as("bk"))
-      .select(col("doc_id"), col("bk.band").as("band"), col("bk.bkey").as("bkey"))
-  }
-
-  /** Typed twin of [[minhashBuckets]]∘[[hashedShingles]]: signatures
-    * and band keys computed per document in ONE stateless JVM pass —
-    * zero shuffle (the agg form shuffles the whole shingle bag through
-    * a 96-column hash agg whose serialized stage sits just above the
-    * 1 MiB task-binary WARN threshold). Bit-for-bit the SQL keys
-    * ([[hashShingle]]/[[signatureOf]]/[[bandKey]] — the parity
-    * [[neardupIngest]]'s stream-static join already depends on and
-    * DedupSpec pins), and a doc with no shingles emits nothing, same
-    * as the agg form where the doc simply has no shingle rows.
-    */
-  private def minhashBucketsTyped(
-      s: SparkSession, dir: String, batchOnly: Option[Boolean]): DataFrame = {
+  private def docSlice(s: SparkSession, dir: String,
+      batchOnly: Option[Boolean]): Dataset[(Long, String)] = {
     import s.implicits._
-    val docs = batchOnly match {
-      case Some(inBatch) => Tables.documents(s, dir).filter(
-        if (inBatch) pmod(col("doc_id"), lit(10)) === IncBatchMod
-        else pmod(col("doc_id"), lit(10)) =!= IncBatchMod)
-      case None => Tables.documents(s, dir)
-    }
-    docs.select(col("doc_id"), col("text")).as[(Long, String)]
+    val docs = Tables.documents(s, dir)
+    batchOnly.fold(docs)(inBatch => docs.filter(
+      if (inBatch) isIncBatch(col("doc_id")) else !isIncBatch(col("doc_id"))))
+      .select(col("doc_id"), col("text")).as[(Long, String)]
+  }
+
+  /** Per-doc (band, bucket-key) rows — the banded LSH index build, one
+    * stateless typed pass per document through [[bandKeys]]: zero
+    * shuffle (the retired SQL form pushed the whole shingle bag
+    * through a 96-column hash agg whose serialized stage sat above the
+    * 1 MiB task-binary WARN threshold). `bands` must divide
+    * [[NumHashes]]; DedupFuzzSpec sweeps the splits.
+    */
+  private[graft] def minhashBucketsTyped(s: SparkSession, dir: String,
+      batchOnly: Option[Boolean], bands: Int = Bands): DataFrame = {
+    require(NumHashes % bands == 0, s"bands=$bands must divide $NumHashes")
+    import s.implicits._
+    docSlice(s, dir, batchOnly)
       .flatMap { case (id, text) =>
-        val x64 = shingleStrings(text).map(hashShingle).toArray
-        if (x64.isEmpty) Nil
-        else {
-          val sig = signatureOf(x64.map(v => ((v % P) + P) % P))
-          (0 until Bands).map(b => (id, b, bandKey(sig, b)))
-        }
+        val keys = bandKeys(shingleStrings(text).map(hashShingle).toArray, bands)
+        keys.indices.map(b => (id, b, keys(b)))
       }
       .toDF("doc_id", "band", "bkey")
   }
 
-  /** Typed twin of [[shingleSets]]∘[[hashedShingles]]: the per-doc
-    * hashed verification set is document-local, so it never needed the
-    * collect_set shuffle. Same rows (array order differs; every
-    * consumer is array_intersect/size — set semantics).
+  /** Per-doc hashed verification sets `(doc_id, hs, n_sh)` — document-
+    * local, so one typed pass with no collect_set shuffle. Array order
+    * is free: every consumer is array_intersect/size (set semantics).
     */
   private def shingleSetsTyped(
       s: SparkSession, dir: String, batchOnly: Option[Boolean]): DataFrame = {
     import s.implicits._
-    val docs = batchOnly match {
-      case Some(inBatch) => Tables.documents(s, dir).filter(
-        if (inBatch) pmod(col("doc_id"), lit(10)) === IncBatchMod
-        else pmod(col("doc_id"), lit(10)) =!= IncBatchMod)
-      case None => Tables.documents(s, dir)
-    }
-    docs.select(col("doc_id"), col("text")).as[(Long, String)]
+    docSlice(s, dir, batchOnly)
       .flatMap { case (id, text) =>
         val x64 = shingleStrings(text).map(hashShingle).toArray
         if (x64.isEmpty) Nil else Seq((id, x64, x64.length))
       }
-      .toDF("doc_id", "shset", "n_sh")
-  }
-
-  /** Per-doc hashed shingle set + size, for exact verification (the
-    * same keys the exact ngramJaccard joins on), gathered once.
-    */
-  private def shingleSets(sh: DataFrame): DataFrame =
-    sh.groupBy(col("doc_id"))
-      .agg(collect_set(col("x64")).as("shset"), first(col("n_sh")).as("n_sh"))
-
-  /** Exact Jaccard ≥ 0.8 verification of a (doc_a, doc_b) candidate
-    * frame against per-side shingle-set frames.
-    */
-  private def verifyJaccard(cand: DataFrame, setsA: DataFrame,
-      setsB: DataFrame): DataFrame = {
-    val a = setsA.select(col("doc_id").as("doc_a"), col("shset").as("sha"), col("n_sh").as("na"))
-    val b = setsB.select(col("doc_id").as("doc_b"), col("shset").as("shb"), col("n_sh").as("nb"))
-    cand.join(a, Seq("doc_a")).join(b, Seq("doc_b"))
-      .withColumn("inter", size(array_intersect(col("sha"), col("shb"))))
-      .withColumn("j", col("inter") / (col("na") + col("nb") - col("inter")))
-      .filter(col("j") >= 0.8)
-      .select(col("doc_a"), col("doc_b"), round(col("j"), 6).as("jaccard"))
+      .toDF("doc_id", "hs", "n_sh")
   }
 
   /** Incremental MinHash maintenance — the banded-LSH ingest path,
@@ -961,7 +914,7 @@ object DedupOps {
     *    whose cost is disk-bandwidth-linear in settled state with a
     *    constant ~100× below re-signaturing the corpus, and — the
     *    point — INDEPENDENT of what happens to be cache-resident.
-    *  - verification sets (doc_id, shset, n_sh), bucketed by doc_id —
+    *  - verification sets (doc_id, hs, n_sh), bucketed by doc_id —
     *    the candidate pairs' set-lookup side.
     *
     * Written once per (JVM, fixture dir) through the session catalog
@@ -977,25 +930,23 @@ object DedupOps {
   private[graft] def settledMinhashTables(
       s: SparkSession, dir: String): (DataFrame, DataFrame) = synchronized {
     val key = graft.Tables.dirKey(dir)
-    val bucketsName = s"graft_ivm_mh_buckets_$key"
-    val setsName = s"graft_ivm_mh_sets_$key"
-    if (!s.catalog.tableExists(bucketsName)) {
-      minhashBucketsTyped(s, dir, Some(false))
-        .write.mode("overwrite")
-        .bucketBy(IvmBuckets, "bkey").sortBy("bkey")
-        .option("path",
-          s"${sys.props("java.io.tmpdir")}/graft-src/ivm/$bucketsName")
-        .saveAsTable(bucketsName)
-    }
-    if (!s.catalog.tableExists(setsName)) {
-      shingleSetsTyped(s, dir, Some(false))
-        .write.mode("overwrite")
-        .bucketBy(IvmBuckets, "doc_id").sortBy("doc_id")
-        .option("path",
-          s"${sys.props("java.io.tmpdir")}/graft-src/ivm/$setsName")
-        .saveAsTable(setsName)
-    }
-    (s.table(bucketsName), s.table(setsName))
+    (durableTable(s, s"graft_ivm_mh_buckets_$key", "bkey")(
+      minhashBucketsTyped(s, dir, Some(false))),
+      durableTable(s, s"graft_ivm_mh_sets_$key", "doc_id")(
+        shingleSetsTyped(s, dir, Some(false))))
+  }
+
+  /** `df` written once per (JVM, table name) as a table bucketed and
+    * sorted by `key`, then read back through the catalog.
+    */
+  private def durableTable(s: SparkSession, name: String, key: String)(
+      df: => DataFrame): DataFrame = {
+    if (!s.catalog.tableExists(name))
+      df.write.mode("overwrite")
+        .bucketBy(IvmBuckets, key).sortBy(key)
+        .option("path", s"${sys.props("java.io.tmpdir")}/graft-src/ivm/$name")
+        .saveAsTable(name)
+    s.table(name)
   }
 
   /** [[dedupMinhashIncremental]] against the DURABLE settled index —
@@ -1024,23 +975,16 @@ object DedupOps {
     */
   def dedupMinhashIncrementalDurable(s: SparkSession, dir: String): DataFrame = {
     val (settledBuckets, settledSets) = settledMinhashTables(s, dir)
+    // doc_a = the batch doc, doc_b = the settled doc until verified;
+    // canonical order only after the verification joins
     val cand = minhashBucketsTyped(s, dir, Some(true))
-      .select(col("doc_id").as("doc_n"), col("bkey"))
-      .join(settledBuckets.select(col("doc_id").as("doc_p"), col("bkey")),
+      .select(col("doc_id").as("doc_a"), col("bkey"))
+      .join(settledBuckets.select(col("doc_id").as("doc_b"), col("bkey")),
         Seq("bkey"))
-      .select(col("doc_n"), col("doc_p")).distinct()
-    val batchSets = shingleSetsTyped(s, dir, Some(true))
-      .select(col("doc_id").as("doc_n"), col("shset").as("shn"),
-        col("n_sh").as("nn"))
-    val setsP = settledSets.select(col("doc_id").as("doc_p"),
-      col("shset").as("shp"), col("n_sh").as("np"))
-    cand.join(batchSets, Seq("doc_n")).join(setsP, Seq("doc_p"))
-      .withColumn("inter", size(array_intersect(col("shn"), col("shp"))))
-      .withColumn("j", col("inter") / (col("nn") + col("np") - col("inter")))
-      .filter(col("j") >= 0.8)
-      .select(least(col("doc_n"), col("doc_p")).as("doc_a"),
-        greatest(col("doc_n"), col("doc_p")).as("doc_b"),
-        round(col("j"), 6).as("jaccard"))
+      .select(col("doc_a"), col("doc_b")).distinct()
+    verifyJaccard(cand, shingleSetsTyped(s, dir, Some(true)), settledSets)
+      .select(least(col("doc_a"), col("doc_b")).as("doc_a"),
+        greatest(col("doc_a"), col("doc_b")).as("doc_b"), col("jaccard"))
   }
 
   /** The settled component structure ([[settledStars]]) as a DURABLE
@@ -1051,15 +995,8 @@ object DedupOps {
     */
   private[graft] def settledStarsTable(
       s: SparkSession, dir: String): DataFrame = synchronized {
-    val name = s"graft_ivm_stars_${graft.Tables.dirKey(dir)}"
-    if (!s.catalog.tableExists(name)) {
-      settledStars(s, dir)
-        .write.mode("overwrite")
-        .bucketBy(IvmBuckets, "node").sortBy("node")
-        .option("path", s"${sys.props("java.io.tmpdir")}/graft-src/ivm/$name")
-        .saveAsTable(name)
-    }
-    s.table(name)
+    durableTable(s, s"graft_ivm_stars_${graft.Tables.dirKey(dir)}", "node")(
+      settledStars(s, dir))
   }
 
   /** [[dedupClustersIncremental]] against the DURABLE star table —
@@ -1073,11 +1010,9 @@ object DedupOps {
     */
   def dedupClustersIncrementalDurable(s: SparkSession, dir: String): DataFrame =
     pairMemo("clusters_incr_durable", s, dir) {
-      val isNew = (d: org.apache.spark.sql.Column) =>
-        pmod(d, lit(10)) === IncBatchMod
       val batchPairs = verifiedPairs(s, dir)
         .select(col("doc_a"), col("doc_b"))
-        .filter(isNew(col("doc_a")) || isNew(col("doc_b")))
+        .filter(isIncBatch(col("doc_a")) || isIncBatch(col("doc_b")))
       // rename-only projection of the contraction's cached output —
       // shares its cache entry and unpersists through
       connectedComponentsStar(
@@ -1089,7 +1024,7 @@ object DedupOps {
     * re-expressed so the arriving documents can be a STREAM: each
     * document's shingles, signature, band keys and hashed
     * verification set are computed in ONE stateless typed pass on the
-    * executor ([[hashShingle]]/[[signatureOf]]/[[bandKey]] — JVM
+    * executor ([[hashShingle]] and the [[bandKeys]] kernel — JVM
     * twins of the SQL expressions, bit-for-bit), so the stream side
     * needs no aggregation at all; candidates come from a
     * stream-static equi-join against the memoized settled band
@@ -1105,12 +1040,7 @@ object DedupOps {
     * scale the settled buckets would be persisted pre-partitioned by
     * (band, bkey) (the bucketed-table pattern of `join_bucketed`) so
     * each trigger's probe is co-located, leaving per-event cost at
-    * O(bands) lookups and state at horizon × match rate. The typed
-    * pass replaced a Catalyst array-lambda form whose
-    * CodegenFallback interpretation cost ~4 ms/document — the JVM
-    * loop is ~10× cheaper and keeps ingest cost linear in the BATCH
-    * with a constant that survives a 100× batch (slope table in
-    * BASELINE.md).
+    * O(bands) lookups and state at horizon × match rate.
     *
     * Works identically on a batch frame (the watermark node is
     * optimizer-eliminated and the pair dedup runs as a plain
@@ -1126,30 +1056,23 @@ object DedupOps {
       settledSets: DataFrame): DataFrame = {
     val s = docs.sparkSession
     import s.implicits._
-    // one JVM pass per document: shingles → 64-bit hashes → signature
-    // → band keys, emitted as Bands rows. [[hashShingle]]/[[bandKey]]
-    // replicate SQL xxhash64 bit-for-bit (seed 42, seed-chained for
-    // multi-argument), so the stream-side keys agree with the
-    // settled index the SQL aggregation built — the property the
-    // oracle gate checks end-to-end (a parity break empties the join)
+    // one JVM pass per document: shingles → 64-bit hashes → band keys
+    // through the same [[bandKeys]] kernel that built the settled
+    // index, emitted as Bands rows (a shingle-less doc emits nothing,
+    // as in the index). The verification set rides along in the row:
+    // a stream-stream join is not allowed here, so the shared
+    // verifier cannot be used on this side.
     val exploded = docs.select(col("doc_id"), col("text"), col("ts"))
       .as[(Long, String, java.sql.Timestamp)]
       .flatMap { case (id, text, t) =>
         val x64 = shingleStrings(text).map(hashShingle).toArray
-        // shingle-less doc → NOTHING, matching the batch index builders
-        // (a doc with no shingle rows never aggregates a signature);
-        // the all-P sentinel rows previously emitted here could never
-        // verify (J = 0) but wasted join work and pair-dedup state
-        if (x64.isEmpty) Nil
-        else {
-          val sig = signatureOf(x64.map(v => ((v % P) + P) % P))
-          (0 until Bands).map(b => (id, t, x64, x64.length, b, bandKey(sig, b)))
-        }
+        val keys = bandKeys(x64)
+        keys.indices.map(b => (id, t, x64, x64.length, b, keys(b)))
       }
       .toDF("doc_n", "ts", "shn", "nn", "band", "bkey")
       .withWatermark("ts", "1 hour")
     val p = settledSets.select(col("doc_id").as("doc_p"),
-      col("shset").as("shp"), col("n_sh").as("np"))
+      col("hs").as("shp"), col("n_sh").as("np"))
     val verified = exploded
       .join(settledBuckets.toDF("doc_p", "band", "bkey"), Seq("band", "bkey"))
       .join(p, Seq("doc_p"))
@@ -1178,7 +1101,7 @@ object DedupOps {
   def streamNeardup(s: SparkSession, dir: String): DataFrame = {
     val (buckets, sets) = settledMinhashIndex(s, dir)
     val batch = Tables.documents(s, dir)
-      .filter(pmod(col("doc_id"), lit(10)) === IncBatchMod)
+      .filter(isIncBatch(col("doc_id")))
       .select(col("doc_id"), col("text"),
         timestamp_seconds(col("doc_id")).as("ts"))
     neardupIngest(batch, buckets, sets)
@@ -1629,11 +1552,9 @@ object DedupOps {
     */
   def dedupClustersIncremental(s: SparkSession, dir: String): DataFrame =
     pairMemo("clusters_incr", s, dir) {
-      val isNew = (d: org.apache.spark.sql.Column) =>
-        pmod(d, lit(10)) === IncBatchMod
       val batchPairs = verifiedPairs(s, dir)
         .select(col("doc_a"), col("doc_b"))
-        .filter(isNew(col("doc_a")) || isNew(col("doc_b")))
+        .filter(isIncBatch(col("doc_a")) || isIncBatch(col("doc_b")))
       // rename-only projection of the contraction's cached output —
       // shares its cache entry and unpersists through (the
       // [[dedupClusters]] pattern; CacheSemanticsSpec)
@@ -1653,11 +1574,9 @@ object DedupOps {
     */
   private[graft] def settledStars(s: SparkSession, dir: String): DataFrame =
     pairMemo("settled_stars", s, dir) {
-      val isNew = (d: org.apache.spark.sql.Column) =>
-        pmod(d, lit(10)) === IncBatchMod
       val oldPairs = verifiedPairs(s, dir)
         .select(col("doc_a"), col("doc_b"))
-        .filter(!isNew(col("doc_a")) && !isNew(col("doc_b")))
+        .filter(!isIncBatch(col("doc_a")) && !isIncBatch(col("doc_b")))
       val labels = connectedComponentsStar(oldPairs)
       val stars = labels.filter(col("node") =!= col("label")).cache()
       stars.count() // materialize before releasing the labels frame
@@ -2013,6 +1932,21 @@ object DedupOps {
        |  coalesce(cleaned_text, '') AS cleaned_text
        |FROM documents d LEFT JOIN per_doc p ON d.doc_id = p.doc_id""".stripMargin
 
+  /** Evidence-only (CandidateEconomy): the raw uncapped shingle
+    * self-join's candidate space — distinct doc pairs sharing ANY
+    * shingle. This is the Θ(Σ df²) shape [[similarityHistogram]] used
+    * before round 10; kept so the economy of the t = 1/2 prefix
+    * filter is measurable, never on a query path.
+    */
+  private[graft] def rawSharingPairs(s: SparkSession, dir: String): DataFrame = {
+    val sh = shingleRows(s, dir)
+      .select(col("doc_id"), xxhash64(col("shingle")).as("sh_h"))
+    sh.select(col("doc_id").as("doc_a"), col("sh_h"))
+      .join(sh.select(col("doc_id").as("doc_b"), col("sh_h")), Seq("sh_h"))
+      .filter(col("doc_a") < col("doc_b"))
+      .select(col("doc_a"), col("doc_b")).distinct()
+  }
+
   /** Candidate-pair similarity histogram — the threshold-tuning view
     * behind every dedup rollout: the full (unthresholded) Jaccard
     * distribution of shingle-sharing pairs, bucketed at 0.1, for
@@ -2035,21 +1969,6 @@ object DedupOps {
     * rounding both engines define identically, and rounding j first
     * could flip a bucket at a 0.1 boundary.
     */
-  /** Evidence-only (CandidateEconomy): the raw uncapped shingle
-    * self-join's candidate space — distinct doc pairs sharing ANY
-    * shingle. This is the Θ(Σ df²) shape [[similarityHistogram]] used
-    * before round 10; kept so the economy of the t = 1/2 prefix
-    * filter is measurable, never on a query path.
-    */
-  private[graft] def rawSharingPairs(s: SparkSession, dir: String): DataFrame = {
-    val sh = shingleRows(s, dir)
-      .select(col("doc_id"), xxhash64(col("shingle")).as("sh_h"))
-    sh.select(col("doc_id").as("doc_a"), col("sh_h"))
-      .join(sh.select(col("doc_id").as("doc_b"), col("sh_h")), Seq("sh_h"))
-      .filter(col("doc_a") < col("doc_b"))
-      .select(col("doc_a"), col("doc_b")).distinct()
-  }
-
   def similarityHistogram(s: SparkSession, dir: String): DataFrame = {
     val cand = ppjoinCandidatesAt(s, dir, 1, 2)
     val sets = hashedSets(s, dir)
@@ -2089,6 +2008,10 @@ object DedupOps {
   /** Modulus selecting the "incoming batch" slice: doc_id % 10 == 7. */
   private[graft] val IncBatchMod = 7
 
+  /** Whether an id falls in the incoming batch slice ([[IncBatchMod]]). */
+  private[graft] def isIncBatch(id: Column): Column =
+    pmod(id, lit(10)) === IncBatchMod
+
   /** Incremental dedup — the production shape: a new ingest batch
     * (here the deterministic doc_id % 10 == [[IncBatchMod]] slice)
     * checked against the EXISTING corpus, instead of re-deduping the
@@ -2103,7 +2026,7 @@ object DedupOps {
     */
   def dedupIncremental(s: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(s, dir)
-    val isNew = pmod(col("doc_id"), lit(10)) === IncBatchMod
+    val isNew = isIncBatch(col("doc_id"))
     val newDocs = docs.filter(isNew)
       .select(col("doc_id"), md5(col("text").cast("binary")).as("h"))
     val baseHash = docs.filter(!isNew)
@@ -2113,8 +2036,7 @@ object DedupOps {
     val cross = pairs
       .select(col("doc_a").as("n"), col("doc_b").as("p"), col("jaccard"))
       .union(pairs.select(col("doc_b").as("n"), col("doc_a").as("p"), col("jaccard")))
-      .filter(pmod(col("n"), lit(10)) === IncBatchMod &&
-        pmod(col("p"), lit(10)) =!= IncBatchMod)
+      .filter(isIncBatch(col("n")) && !isIncBatch(col("p")))
     val wBest = Window.partitionBy(col("n")).orderBy(col("jaccard").desc, col("p"))
     val near = cross
       .withColumn("rn", row_number().over(wBest))
@@ -2234,60 +2156,15 @@ object DedupOps {
         |      ORDER BY CAST(ts AS TIMESTAMP) DESC, event_id DESC) AS rn
         |  FROM events) WHERE rn = 1""".stripMargin)(dedupKeepLatest),
     Q("dedup_containment",
-      s"""WITH toks AS (
-         |  SELECT doc_id, $tokensSql AS t FROM documents),
-         |sh AS (
-         |  SELECT DISTINCT doc_id,
-         |    unnest(list_transform(range(1, greatest(len(t)-1, 1)),
-         |      i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2])) AS shingle
-         |  FROM toks),
-         |sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY 1),
-         |pairs AS (
-         |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS inter
-         |  FROM sh a JOIN sh b ON a.shingle = b.shingle
-         |    AND a.doc_id <> b.doc_id
-         |  GROUP BY 1, 2)
-         |SELECT doc_a, doc_b, round(inter / sa.n, 6) AS containment
-         |FROM pairs JOIN sizes sa ON sa.doc_id = doc_a
-         |WHERE inter / sa.n >= 0.9""".stripMargin)(containmentPairs),
+      containmentOracle)(containmentPairs),
     // asymmetric prefix filter, same oracle as the df-capped baseline:
     // the gate checks the directional completeness theorem
     Q("dedup_containment_prefix",
-      s"""WITH toks AS (
-         |  SELECT doc_id, $tokensSql AS t FROM documents),
-         |sh AS (
-         |  SELECT DISTINCT doc_id,
-         |    unnest(list_transform(range(1, greatest(len(t)-1, 1)),
-         |      i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2])) AS shingle
-         |  FROM toks),
-         |sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY 1),
-         |pairs AS (
-         |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS inter
-         |  FROM sh a JOIN sh b ON a.shingle = b.shingle
-         |    AND a.doc_id <> b.doc_id
-         |  GROUP BY 1, 2)
-         |SELECT doc_a, doc_b, round(inter / sa.n, 6) AS containment
-         |FROM pairs JOIN sizes sa ON sa.doc_id = doc_a
-         |WHERE inter / sa.n >= 0.9""".stripMargin)(containmentPrefixFilter),
+      containmentOracle)(containmentPrefixFilter),
     // asymmetric length+positional filters on top, same oracle again:
     // the gate proves the extra pruning loses no qualifying pair
     Q("dedup_containment_ppjoin",
-      s"""WITH toks AS (
-         |  SELECT doc_id, $tokensSql AS t FROM documents),
-         |sh AS (
-         |  SELECT DISTINCT doc_id,
-         |    unnest(list_transform(range(1, greatest(len(t)-1, 1)),
-         |      i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2])) AS shingle
-         |  FROM toks),
-         |sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY 1),
-         |pairs AS (
-         |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS inter
-         |  FROM sh a JOIN sh b ON a.shingle = b.shingle
-         |    AND a.doc_id <> b.doc_id
-         |  GROUP BY 1, 2)
-         |SELECT doc_a, doc_b, round(inter / sa.n, 6) AS containment
-         |FROM pairs JOIN sizes sa ON sa.doc_id = doc_a
-         |WHERE inter / sa.n >= 0.9""".stripMargin)(containmentPpjoin),
+      containmentOracle)(containmentPpjoin),
     Q("dup_count",
       s"""WITH pr AS (
          |$jaccardOracle),

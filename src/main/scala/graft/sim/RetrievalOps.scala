@@ -130,11 +130,9 @@ object RetrievalOps {
 
   // ---- embedding outliers ------------------------------------------
 
-  private val OutlierFactor = 1.5 // flag dist > factor × mean dist
-
   /** Euclidean distance of every embedding to the corpus centroid,
     * flagged as an outlier when the distance exceeds
-    * [[OutlierFactor]] × the mean distance. The centroid (dim rows)
+    * 1.5 × the mean distance. The centroid (dim rows)
     * and the threshold (1 row) broadcast back onto the scan — the
     * corpus itself shuffles only on vec_id for the per-vector sum.
     * All sums are DECIMAL(18,6) of rounded terms, so centroid,

@@ -107,8 +107,6 @@ object TextAnalysis {
     * memo the tokenize+explode+agg would run twice per call.
     */
   private val tfMemo = new graft.KeyedMemo
-  /** Test hook: drop the tf memo (cold-path races). */
-  private[graft] def clearTfCache(): Unit = tfMemo.clear()
 
   private def termFreqs(s: SparkSession, dir: String): DataFrame =
     tfMemo("tfidf_tf", s, dir) {

@@ -11,7 +11,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * (cluster labels, star labels, incremental labels) return exactly
   * this shape over an internally cached+materialized frame; if a
   * Spark upgrade ever changed the canonical-match rule, this spec
-  * fails first and the memos would need explicit re-caching.
+  * fails first and the memos would need explicit re-caching. It also
+  * pins that `Tables.scanUnits` never caches a failed probe.
   */
 class CacheSemanticsSpec extends AnyFunSuite {
   import TestSpark._
@@ -50,5 +51,17 @@ class CacheSemanticsSpec extends AnyFunSuite {
     assert(!cached(filtered),
       "filtered projection unexpectedly matched the child's cache entry")
     df.unpersist()
+  }
+
+  test("a failed scan-unit probe is not cached: the next probe sees the real layout") {
+    // Tables.scanUnits caches per path; its fallback for an unreadable
+    // path must not be, or one transient error would disable the
+    // scan fan-out for the rest of the JVM
+    val path = java.nio.file.Files.createTempDirectory("graft-scan-units")
+      .resolve("t.parquet").toString
+    assert(Tables.scanUnits(spark, path, 4) == 4, "missing path: fallback answer")
+    spark.range(10).repartition(2).write.parquet(path)
+    assert(Tables.scanUnits(spark, path, 4) == 2,
+      "the probe after the write must count the two files' row groups")
   }
 }

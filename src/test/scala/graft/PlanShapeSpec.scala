@@ -271,10 +271,11 @@ class PlanShapeSpec extends AnyFunSuite {
   test("dedup_minhash verification joins stay equi (bucket keys)") {
     val p = plan("dedup_minhash")
     assert(!p.contains("CartesianProduct"))
-    // signatures/band keys come from the typed per-doc pass (document-
-    // local: zero shuffle), not the 96-column min aggregate — the agg
-    // form shuffled the whole shingle bag and its serialized stage sat
-    // above the 1 MiB task-binary WARN threshold
+    // band keys come from a typed signing pass over the memoized
+    // hashed shingle sets (the frame the verification joins read too),
+    // not a 96-column min aggregate — that retired form shuffled the
+    // whole shingle bag and its serialized stage sat above the 1 MiB
+    // task-binary WARN threshold
     assert(p.contains("SerializeFromObject"), "signatures must come from the typed pass")
     assert(!p.contains("partial_min"), "the 96-min agg form should be gone")
   }

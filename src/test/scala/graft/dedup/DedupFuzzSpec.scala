@@ -24,8 +24,6 @@ import graft.TestSpark
 class DedupFuzzSpec extends AnyFunSuite {
   import TestSpark._
 
-  private val P = 2147483647L
-
   private lazy val sets: Map[Long, Set[Long]] = {
     val docs = spark.read.parquet(s"$sfTiny/documents.parquet")
       .select("doc_id", "text").collect()
@@ -158,12 +156,11 @@ class DedupFuzzSpec extends AnyFunSuite {
   }
 
   test("banded minhash pigeonhole holds at every sampled band split") {
-    // in-JVM signatures via the same twins the streaming path pins
-    // against SQL (DedupSpec); the property under test is the BANDING:
-    // < bands disagreeing positions cannot spoil every band
+    // in-JVM signatures via the twin DedupSpec pins against SQL; the
+    // property under test is the BANDING of the production bucket
+    // builder: < bands disagreeing positions cannot spoil every band
     val sigs: Map[Long, Array[Long]] = sets.map { case (id, sh) =>
-      id -> DedupOps.signatureOf(
-        sh.toArray.map(v => ((v % P) + P) % P))
+      id -> DedupOps.signatureOf(sh.toArray)
     }
     val ids = sigs.keys.toArray.sorted
     def hamming(a: Array[Long], b: Array[Long]): Int =
@@ -175,7 +172,8 @@ class DedupFuzzSpec extends AnyFunSuite {
         j <- (i + 1) until ids.length
         if hamming(sigs(ids(i)), sigs(ids(j))) < bands
       } yield (ids(i), ids(j))).toSet
-      val cand = pairsOf(DedupOps.minhashBandedCandidatesAt(spark, sfTiny, bands))
+      val cand = pairsOf(DedupOps.bandPairs(
+        DedupOps.minhashBucketsTyped(spark, sfTiny, None, bands)))
       assert(must.subsetOf(cand),
         s"bands=$bands: signature-close pair missing from banded candidates " +
           s"(${(must -- cand).take(3)})")

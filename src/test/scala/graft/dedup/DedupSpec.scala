@@ -20,10 +20,11 @@ class DedupSpec extends AnyFunSuite {
   }
 
   test("typed JVM hashing matches the SQL expression forms bit-for-bit") {
-    // the streaming ingest path hashes on the executor in a typed
-    // pass; its keys must land in the SAME buckets as the SQL-built
-    // settled index — pin hashShingle/signatureOf/bandKey against
-    // the expression forms on real fixture documents
+    // every MinHash path signs on the executor through one typed
+    // kernel; its band keys must equal xxhash64 over the SQL
+    // signature's band columns — pin hashShingle, signatureOf and the
+    // bandKeys kernel against the expression forms on real fixture
+    // documents
     import spark.implicits._
     val docs = graft.Tables.documents(spark, sfSmall)
       .select(col("doc_id"), col("text")).as[(Long, String)]
@@ -47,16 +48,19 @@ class DedupSpec extends AnyFunSuite {
     var nonTrivial = 0
     docs.foreach { case (id, text) =>
       val x64 = DedupOps.shingleStrings(text).map(DedupOps.hashShingle).toArray
-      val sig = DedupOps.signatureOf(
-        x64.map(v => ((v % 2147483647L) + 2147483647L) % 2147483647L))
       val (sqlX64, sqlSig, sqlBands) = got(id)
       assert(x64.toSeq == sqlX64, s"doc $id shingle hashes diverge")
-      assert(sig.toSeq == sqlSig, s"doc $id signature diverges")
-      (0 until DedupOps.Bands).foreach { b =>
-        assert(DedupOps.bandKey(sig, b) == sqlBands(b),
-          s"doc $id band $b key diverges")
+      assert(DedupOps.signatureOf(x64).toSeq == sqlSig,
+        s"doc $id signature diverges")
+      val keys = DedupOps.bandKeys(x64)
+      if (x64.isEmpty) assert(keys.isEmpty, s"shingle-less doc $id got band keys")
+      else {
+        assert(keys.length == DedupOps.Bands)
+        (0 until DedupOps.Bands).foreach { b =>
+          assert(keys(b) == sqlBands(b), s"doc $id band $b key diverges")
+        }
+        nonTrivial += 1
       }
-      if (x64.nonEmpty) nonTrivial += 1
     }
     assert(nonTrivial > 10, "fixture slice should have shingled docs")
   }
