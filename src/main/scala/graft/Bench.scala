@@ -94,9 +94,10 @@ object Bench {
       // Cross-scale isolation (round 9): the dedup/ANN substrates are
       // memoized per (session, dataset) and PERSISTED — in a multi-dir
       // sweep the previous fixtures' bags stay pinned in storage
-      // memory and distort the biggest point (observed at 1000× docs:
-      // the 20 GB shingle bag competes with ~2.5 GB of foreign pins,
-      // and per-pass times bifurcate into cached/recompute modes).
+      // memory and distort the biggest point (observed at 1000× docs,
+      // when the dedup root was a 20 GB shingle-string bag: it competed
+      // with ~2.5 GB of foreign pins, and per-pass times bifurcated
+      // into cached/recompute modes).
       // Start every fixture cold; the warm-up pass below rebuilds its
       // own substrates. Single-dir runs (the driver contract) skip
       // this — nothing foreign is pinned.

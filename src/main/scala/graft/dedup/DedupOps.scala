@@ -56,7 +56,7 @@ object DedupOps {
   /** Distinct word-3-gram shingle set per document (the near-dup
     * content key). Guarded: <3 tokens → empty set. Column-expression
     * form for per-row use (specs, ad-hoc); the query pipelines use
-    * [[shingleRows]] — Spark's higher-order functions are
+    * [[shingleSetsTyped]] — Spark's higher-order functions are
     * CodegenFallback and interpret one lambda call per element, which
     * made this expression the dominant cost of both near-dup queries.
     */
@@ -75,13 +75,14 @@ object DedupOps {
 
   /** Keyed substrate memo — the verifiedPairs discipline extended one
     * level down, to the frames every dedup stage rebuilds from the
-    * same deterministic input: the (doc, shingle) bag and the SimHash
-    * fingerprints. Five registry queries consume the shingle bag and
-    * three the fingerprints; without the memo each re-runs the
-    * tokenize+shingle flatMap (the dominant cost of the dedup sweep).
-    * The bag is corpus×shingles-sized — far bigger than the model
-    * frames the other memos pin — so it persists MEMORY_AND_DISK
-    * (spills, never OOMs) and exists for multi-query sweeps over one
+    * same deterministic input: the per-doc hashed shingle sets (and
+    * the rarity ranking derived from them) and the SimHash
+    * fingerprints. Every shingle-based registry query reads the sets
+    * and three read the fingerprints; without the memo each re-runs
+    * the tokenize+shingle pass (the dominant cost of the dedup sweep).
+    * The sets are corpus×shingles-sized — far bigger than the model
+    * frames the other memos pin — so they persist MEMORY_AND_DISK
+    * (spills, never OOMs) and exist for multi-query sweeps over one
     * dataset; a single 100 TB query pays exactly one pass either way.
     */
   private val substrate = new graft.KeyedMemo
@@ -89,30 +90,34 @@ object DedupOps {
   /** Test hook: drop the substrate memo (cold-path races). */
   private[graft] def clearSubstrateCache(): Unit = substrate.clear()
 
-  /** One row per (document, distinct shingle) with the doc's shingle
-    * count — a typed flatMap: a single JVM pass per document, emitted
-    * once, memoized per (session, dataset), and reused by the exact
-    * joins, the prefix-family substrates (and through them MinHash
-    * signing), and the histogram.
+  /** Per-doc hashed shingle sets `(doc_id, hs, n_sh)` — the root
+    * substrate of the dedup family, memoized per (session, dataset).
+    * One typed pass per document ([[shingleSetsTyped]]: no strings
+    * kept, no aggregate), hash-partitioned on doc_id so MinHash
+    * signing runs on every core and the doc_id-keyed verification
+    * joins read the sets without another exchange. Every other
+    * shingle frame derives from it ([[shingleHashRows]],
+    * [[rarityRanked]]); at 8 B per shingle it is the smallest form of
+    * the corpus any consumer reads, so it is pinned at every scale.
     */
-  private def shingleRows(s: SparkSession, dir: String): DataFrame =
-    substrate("shingles", s, dir) {
-      import s.implicits._
-      val bag = Tables.documents(s, dir)
-        .select(col("doc_id"), col("text")).as[(Long, String)]
-        .flatMap { case (id, text) =>
-          val sh = shingleStrings(text)
-          sh.map(x => (id, sh.length, x))
-        }
-        .toDF("doc_id", "n_sh", "shingle")
+  private def hashedSets(s: SparkSession, dir: String): DataFrame =
+    substrate("hashed_sets", s, dir) {
+      val sets = shingleSetsTyped(s, dir, None).repartition(col("doc_id"))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       // Materialize NOW: the first consumer is usually a self-join whose
       // independent map stages would otherwise cold-compute the same
-      // blocks concurrently — the flatMap runs ~3× and BlockManager
-      // logs "already exists" per duplicate. One count() job runs it once.
-      bag.count()
-      bag
+      // blocks concurrently. One count() job runs the pass once.
+      sets.count()
+      sets
     }
+
+  /** One row per (document, distinct shingle hash) with the doc's
+    * shingle count — [[hashedSets]] exploded into the inverted-join
+    * shape. `sh_h` equals SQL `xxhash64(shingle)` ([[hashShingle]]).
+    */
+  private def shingleHashRows(s: SparkSession, dir: String): DataFrame =
+    hashedSets(s, dir)
+      .select(col("doc_id"), col("n_sh"), explode(col("hs")).as("sh_h"))
 
   /** Document-frequency cap shared by the exact pair joins: every
     * shingle key with df > [[MaxShingleDf]] is dropped BEFORE the
@@ -126,7 +131,7 @@ object DedupOps {
     * them). df comes from one partial+final count on the SAME key the
     * join shuffles on (the exchange is reusable), and the hot list is
     * heavy-hitters-small by construction — it rides a broadcast
-    * anti-join, so the shingle bag never reshuffles for the gate.
+    * anti-join, so the shingle rows never reshuffle for the gate.
     * The cap is 40× the sf0.1 fixture's max df (25), so fixture
     * results — and the DuckDB oracles — are unchanged.
     */
@@ -151,12 +156,10 @@ object DedupOps {
     */
   def ngramJaccard(s: SparkSession, dir: String): DataFrame = {
     // join key is the 8-byte shingle hash, not the ~20-char string:
-    // the (doc, shingle) bag is the largest shuffle in the query and
-    // shrinks ~3× hashed. Collisions (~n²/2⁶⁵) would be deterministic
+    // the (doc, shingle) rows are the largest shuffle in the query and
+    // shrink ~3× hashed. Collisions (~n²/2⁶⁵) would be deterministic
     // but are vanishingly improbable at any realistic shingle count.
-    val sh = dfCapped(shingleRows(s, dir)
-      .select(col("doc_id"), col("n_sh"), xxhash64(col("shingle")).as("sh_h")),
-      MaxShingleDf)
+    val sh = dfCapped(shingleHashRows(s, dir), MaxShingleDf)
     val a = sh.select(col("doc_id").as("doc_a"), col("n_sh").as("na"), col("sh_h"))
     val b = sh.select(col("doc_id").as("doc_b"), col("n_sh").as("nb"), col("sh_h"))
     a.join(b, Seq("sh_h"))
@@ -203,18 +206,13 @@ object DedupOps {
     * by the doc's own shingle count.
     */
   private def rarityRanked(s: SparkSession, dir: String): DataFrame =
-    // r11: memoized under the same substrate discipline as the shingle
-    // bag it derives from. Six registry queries (prefix, ppjoin, both
-    // containment rungs, the histogram, plus the fuzz sweeps) each
-    // rebuilt the df-count join + per-doc rank window from the bag —
-    // the dominant repeated work of the dedup sweep after the bag
-    // itself was memoized in round 4. The ranked frame is the bag
-    // minus the shingle STRINGS (8-byte hashes + 3 ints), so it pins
-    // LESS storage than the bag that every consumer would otherwise
-    // re-scan; MEMORY_AND_DISK like the bag, one pass per dataset.
+    // Memoized like the hashed sets it derives from: the prefix rungs,
+    // both containment rungs, the histogram and the fuzz sweeps all
+    // read it, and each would otherwise redo the df-count join and
+    // the per-doc rank window. Rows are [[shingleHashRows]] plus the
+    // shingle's df and its rank (8-byte hash + 3 ints per row).
     substrate("rarity_ranked", s, dir) {
-      val sh = shingleRows(s, dir)
-        .select(col("doc_id"), col("n_sh"), xxhash64(col("shingle")).as("sh_h"))
+      val sh = shingleHashRows(s, dir)
       val dfCount = sh.groupBy(col("sh_h")).agg(count(lit(1)).as("df"))
       val ranked = sh.join(dfCount, Seq("sh_h"))
         .withColumn("rnk", row_number().over(
@@ -253,59 +251,12 @@ object DedupOps {
       .select(col("doc_a"), col("doc_b")).distinct()
   }
 
-  /** Per-doc full hashed shingle sets for exact verification — built
-    * from the memoized [[rarityRanked]] frame (8-byte hashes, no
-    * shingle strings), so the expensive bag scan + xxhash re-eval
-    * never repeats per verify call. r12: memoized under the substrate
-    * discipline — five registry queries (prefix, ppjoin, both
-    * containment rungs, the histogram) each re-ran the collect_set
-    * aggregation over the ranked frame per verify call — but with
-    * SIZE-AWARE ADMISSION: pinning is only free while the frame is
-    * small next to the heap. Measured at the 100×-docs decade in the
-    * 8 GiB local JVM, the extra ~350 MB pin squeezed execution memory
-    * enough that the prefix family's largest verify join spilled
-    * (dedup_prefix_filter 21.2→37.2 s) while every smaller decade won
-    * (sf0.1 −0.2 s × 5 queries; 10×-docs prefix 3.64→2.76 s). The
-    * admission bound — estimated cells × 8 B ≤ 2% of max heap — keeps
-    * the memo at the decades where it pays and recomputes per call
-    * past them, exactly how a cache admission policy should degrade.
-    */
-  private val setsAdmission =
-    scala.collection.mutable.Map[(SparkSession, String), Boolean]()
-
-  private def hashedSets(s: SparkSession, dir: String): DataFrame = {
-    def build = rarityRanked(s, dir)
-      .select(col("doc_id"), col("n_sh"), col("sh_h"))
-      .groupBy(col("doc_id"))
-      .agg(collect_set(col("sh_h")).as("hs"), first(col("n_sh")).as("n_sh"))
-    val key = (s, dir)
-    val known = setsAdmission.synchronized {
-      setsAdmission.filterInPlace { case ((sess, _), _) => !sess.sparkContext.isStopped }
-      setsAdmission.get(key)
-    }
-    val admit = known.getOrElse {
-      // one count over the persisted parent (fast) — outside the lock,
-      // per the KeyedMemo rule: never run Spark jobs under a memo lock
-      val cells = rarityRanked(s, dir).count()
-      val a = cells * 8L * 50 <= Runtime.getRuntime.maxMemory
-      setsAdmission.synchronized { setsAdmission.update(key, a) }
-      a
-    }
-    if (!admit) build
-    else substrate("hashed_sets", s, dir) {
-      val sets = build
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      sets.count() // materialize once (cold-race discipline of the family)
-      sets
-    }
-  }
-
   /** The one exact Jaccard verifier: candidate (doc_a, doc_b) pairs
     * joined against two `(doc_id, hs, n_sh)` set frames — doc_a looks
     * up `setsA`, doc_b looks up `setsB` — keeping J ≥ t, with the same
     * output contract and rounding as [[ngramJaccard]]. The symmetric
-    * rungs pass one frame twice; the durable maintenance path passes
-    * its batch sets and its settled table, never their union.
+    * rungs pass one frame twice; the two incremental paths pass their
+    * batch sets and their settled sets, never the union.
     */
   private def verifyJaccard(cand: DataFrame, setsA: DataFrame,
       setsB: DataFrame, t: Double = 0.8): DataFrame = {
@@ -423,9 +374,7 @@ object DedupOps {
     * [[ngramJaccard]]: bounded fan-out per key, no signal lost).
     */
   def containmentPairs(s: SparkSession, dir: String): DataFrame = {
-    val sh = dfCapped(shingleRows(s, dir)
-      .select(col("doc_id"), col("n_sh"), xxhash64(col("shingle")).as("sh_h")),
-      MaxShingleDf)
+    val sh = dfCapped(shingleHashRows(s, dir), MaxShingleDf)
     val a = sh.select(col("doc_id").as("doc_a"), col("n_sh").as("na"), col("sh_h"))
     val b = sh.select(col("doc_id").as("doc_b"), col("sh_h"))
     a.join(b, Seq("sh_h"))
@@ -490,8 +439,8 @@ object DedupOps {
       .filter(col("rnk") <=
         col("n_sh") - expr(s"($p * n_sh + ${q - 1}) div $q") + 1)
       .select(col("doc_id").as("doc_a"), col("sh_h"))
-    val fullB = shingleRows(s, dir)
-      .select(col("doc_id").as("doc_b"), xxhash64(col("shingle")).as("sh_h"))
+    val fullB = shingleHashRows(s, dir)
+      .select(col("doc_id").as("doc_b"), col("sh_h"))
     prefixA.join(fullB, Seq("sh_h"))
       .filter(col("doc_a") =!= col("doc_b"))
       .select(col("doc_a"), col("doc_b")).distinct()
@@ -768,24 +717,18 @@ object DedupOps {
     * never all-pairs.
     *
     * Both the band keys and the verification sets come from the
-    * memoized [[hashedSets]] substrate — the frame the prefix rungs
-    * verify against ([[hashShingle]] IS SQL xxhash64, seed 42, the
-    * parity DedupSpec pins, so the set values are the same). The
-    * signing pass is typed ([[bandKeys]] per doc, no aggregate); the
-    * doc_id repartition spreads it across cores (the cached frame may
-    * sit in one coalesced partition) — hash-keyed, so deterministic,
-    * and the per-permutation min is order-free. The substrate pays off
-    * when the dedup family runs together: a lone run builds the
-    * rarity-ranked frame (df join, per-doc rank, collect_set) that a
-    * stateless pass over the documents would not, and where
-    * [[hashedSets]] declines to pin (large decades) that subtree is
-    * recomputed rather than cached.
+    * memoized [[hashedSets]] root — the frame every exact rung
+    * verifies against. A cold run builds exactly that one frame: one
+    * typed pass per document, no shingle strings, no aggregate. The
+    * signing pass is typed too ([[bandKeys]] per doc over the cached
+    * partitions, which are hash-partitioned on doc_id, so it runs on
+    * every core), and both verification joins read the sets on their
+    * doc_id partitioning without a new exchange of the arrays.
     */
   def minhashNeardup(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val sets = hashedSets(s, dir)
     val buckets = sets
-      .repartition(s.sparkContext.defaultParallelism, col("doc_id"))
       .select(col("doc_id"), col("hs")).as[(Long, Seq[Long])]
       .flatMap { case (id, hs) =>
         val keys = bandKeys(hs.toArray)
@@ -827,9 +770,11 @@ object DedupOps {
       .toDF("doc_id", "band", "bkey")
   }
 
-  /** Per-doc hashed verification sets `(doc_id, hs, n_sh)` — document-
-    * local, so one typed pass with no collect_set shuffle. Array order
-    * is free: every consumer is array_intersect/size (set semantics).
+  /** Per-doc hashed shingle sets `(doc_id, hs, n_sh)` — document-
+    * local, so one typed pass with no collect_set shuffle; the build
+    * of [[hashedSets]] and of the incremental paths' batch and settled
+    * sets. Docs with no shingle get no row. Array order is free: every
+    * consumer is array_intersect/size/explode (set semantics).
     */
   private def shingleSetsTyped(
       s: SparkSession, dir: String, batchOnly: Option[Boolean]): DataFrame = {
@@ -857,17 +802,29 @@ object DedupOps {
     * J ≥ 0.8, same contract as `dedup_minhash`), so the gate checks
     * the maintenance identity itself. DedupSpec additionally pins
     * ≡ the full recompute's cross-boundary slice.
+    *
+    * As in [[dedupMinhashIncrementalDurable]], each candidate side is
+    * verified against its own source — the batch doc against the
+    * batch's typed sets, the settled doc against the settled memo —
+    * never a batch∪settled union, which would carry the whole settled
+    * set frame through both verification joins.
     */
   def dedupMinhashIncremental(s: SparkSession, dir: String): DataFrame = {
     val (settledBuckets, settledSets) = settledMinhashIndex(s, dir)
-    val cand = minhashBucketsTyped(s, dir, Some(true)).toDF("doc_n", "band", "bkey")
-      .join(settledBuckets.toDF("doc_p", "band", "bkey"), Seq("band", "bkey"))
-      .select(col("doc_n"), col("doc_p")).distinct()
-      .select(least(col("doc_n"), col("doc_p")).as("doc_a"),
-        greatest(col("doc_n"), col("doc_p")).as("doc_b"))
-    val allSets = shingleSetsTyped(s, dir, Some(true)).union(settledSets)
-    verifyJaccard(cand, allSets, allSets)
+    // doc_a = the batch doc, doc_b = the settled doc until verified;
+    // canonical order only after the verification joins
+    val cand = minhashBucketsTyped(s, dir, Some(true)).toDF("doc_a", "band", "bkey")
+      .join(settledBuckets.toDF("doc_b", "band", "bkey"), Seq("band", "bkey"))
+      .select(col("doc_a"), col("doc_b")).distinct()
+    canonicalPairs(verifyJaccard(cand, shingleSetsTyped(s, dir, Some(true)), settledSets))
   }
+
+  /** Verified (batch doc, settled doc) pairs in canonical
+    * doc_a < doc_b order.
+    */
+  private def canonicalPairs(verified: DataFrame): DataFrame =
+    verified.select(least(col("doc_a"), col("doc_b")).as("doc_a"),
+      greatest(col("doc_a"), col("doc_b")).as("doc_b"), col("jaccard"))
 
   /** The settled corpus's banded index as (band buckets, verification
     * sets), memoized per (session, dataset) — "yesterday's index",
@@ -982,9 +939,7 @@ object DedupOps {
       .join(settledBuckets.select(col("doc_id").as("doc_b"), col("bkey")),
         Seq("bkey"))
       .select(col("doc_a"), col("doc_b")).distinct()
-    verifyJaccard(cand, shingleSetsTyped(s, dir, Some(true)), settledSets)
-      .select(least(col("doc_a"), col("doc_b")).as("doc_a"),
-        greatest(col("doc_a"), col("doc_b")).as("doc_b"), col("jaccard"))
+    canonicalPairs(verifyJaccard(cand, shingleSetsTyped(s, dir, Some(true)), settledSets))
   }
 
   /** The settled component structure ([[settledStars]]) as a DURABLE
@@ -1719,7 +1674,7 @@ object DedupOps {
         }
         .toDF("doc_id", "simhash") // one 8-byte word per doc: tiny
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      // Materialized on build for the same reason as [[shingleRows]]:
+      // Materialized on build for the same reason as [[hashedSets]]:
       // the banded self-join's two map stages otherwise cold-compute
       // the fingerprint blocks concurrently (MD5 per doc, twice).
       fp.count()
@@ -1939,8 +1894,7 @@ object DedupOps {
     * filter is measurable, never on a query path.
     */
   private[graft] def rawSharingPairs(s: SparkSession, dir: String): DataFrame = {
-    val sh = shingleRows(s, dir)
-      .select(col("doc_id"), xxhash64(col("shingle")).as("sh_h"))
+    val sh = shingleHashRows(s, dir)
     sh.select(col("doc_id").as("doc_a"), col("sh_h"))
       .join(sh.select(col("doc_id").as("doc_b"), col("sh_h")), Seq("sh_h"))
       .filter(col("doc_a") < col("doc_b"))

@@ -54,7 +54,7 @@ object TextAnalysis {
     * Bigrams come from a typed flatMap — one JVM pass per document;
     * the equivalent transform/element_at expression chain is
     * CodegenFallback and interprets per element (see
-    * DedupOps.shingleRows for the same trade).
+    * DedupOps.shingleSetsTyped for the same trade).
     */
   def ngramBigrams(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._

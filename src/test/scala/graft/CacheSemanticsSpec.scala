@@ -12,7 +12,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * this shape over an internally cached+materialized frame; if a
   * Spark upgrade ever changed the canonical-match rule, this spec
   * fails first and the memos would need explicit re-caching. It also
-  * pins that `Tables.scanUnits` never caches a failed probe.
+  * pins that `Tables.scanUnits` never caches a failed probe, and that a
+  * cold MinHash run pins one frame only.
   */
 class CacheSemanticsSpec extends AnyFunSuite {
   import TestSpark._
@@ -63,5 +64,17 @@ class CacheSemanticsSpec extends AnyFunSuite {
     spark.range(10).repartition(2).write.parquet(path)
     assert(Tables.scanUnits(spark, path, 4) == 2,
       "the probe after the write must count the two files' row groups")
+  }
+
+  test("a cold dedup_minhash run persists exactly one frame: the hashed shingle sets") {
+    // the hashed sets are the dedup family's root substrate; a MinHash
+    // run signs and verifies from them alone, so no shingle-string bag,
+    // rarity ranking or set aggregate may be pinned on its way
+    graft.dedup.DedupOps.clearSubstrateCache()
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    SparkEntry.queries("dedup_minhash")(spark, sfTiny)
+      .write.format("noop").mode("overwrite").save()
+    val added = spark.sparkContext.getPersistentRDDs.keySet -- before
+    assert(added.size == 1, s"dedup_minhash pinned ${added.size} frames")
   }
 }

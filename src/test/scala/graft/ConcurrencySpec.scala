@@ -40,11 +40,12 @@ class ConcurrencySpec extends AnyFunSuite {
       concurrentFirst = true)
   }
 
-  test("dedup substrate memos race COLD (shingle bag + simhash fingerprints)") {
+  test("dedup substrate memos race COLD (hashed shingle sets + simhash fingerprints)") {
     // dedup_ngram_jaccard and dedup_similarity_histogram both read the
-    // memoized (doc, shingle) bag, simhash_pairs the fingerprint memo —
-    // cleared first (pairs too, since ngramJaccard feeds verifiedPairs)
-    // so all 9 futures race the substrate cold-miss path
+    // memoized hashed-set root (the histogram also the rarity ranking
+    // derived from it), simhash_pairs the fingerprint memo — cleared
+    // first (pairs too, since ngramJaccard feeds verifiedPairs) so all
+    // 9 futures race the substrate cold-miss path
     graft.dedup.DedupOps.clearSubstrateCache()
     graft.dedup.DedupOps.clearPairCache()
     runConcurrent(

@@ -278,6 +278,11 @@ class PlanShapeSpec extends AnyFunSuite {
     // task-binary WARN threshold
     assert(p.contains("SerializeFromObject"), "signatures must come from the typed pass")
     assert(!p.contains("partial_min"), "the 96-min agg form should be gone")
+    // the sets are one typed pass per document: the rarity-ranked
+    // subtree (df join + per-doc rank window) and a collect_set
+    // aggregate are off this query's path
+    assert(!p.contains("collect_set"), "the hashed sets must not be aggregated")
+    assert(!p.contains("Window"), "the rarity-ranked subtree must be off the path")
   }
 
   test("kmeans_assign is map-only: centroids ride as literals, zero shuffles") {
